@@ -32,6 +32,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from geomesa_hive_spark.pipeline import index_io
 from geomesa_hive_spark.pipeline.text import normalize_text, word_tokens
 
 __all__ = [
@@ -1335,6 +1336,28 @@ def embedding_near_dup_pairs(
 # only the partitions holding candidate ids.
 
 
+def _index(path: str) -> index_io.GenerationalIndex:
+    return index_io.GenerationalIndex(path, "minhash index")
+
+
+def _sides(sigs: DataFrame, m: dict) -> dict:
+    """The two sides of a signed batch under the index parameters ``m``:
+    ``sigs/`` (id, sig) by ``sbucket`` and ``bands/`` (id, band, bh) by
+    ``bucket``."""
+    # localCheckpoint: the signature computation (tokenize + gram
+    # explode + md5 + num_perm min-aggregates — the dominant cost of
+    # the whole build) feeds BOTH the sigs write and the band-key
+    # derivation; materializing it once means one signing pass, not
+    # two (guide §1.2: remove passes first)
+    sigs = sigs.localCheckpoint()
+    nb, bucket = m["n_buckets"], index_io.bucket_of
+    keys = _minhash_band_keys(sigs, m["num_perm"], m["bands"])
+    return {
+        "sigs": (sigs.withColumn("sbucket", bucket("id", nb)), "sbucket"),
+        "bands": (keys.withColumn("bucket", bucket("bh", nb)), "bucket"),
+    }
+
+
 def build_minhash_index(
     df: DataFrame,
     id_col: str,
@@ -1353,57 +1376,17 @@ def build_minhash_index(
     ``_index.json`` root pinning the signature parameters (a query with
     different params would silently match nothing — the stored index IS
     the parameter commitment). Returns the metadata dict."""
-    import json
-    import os
-
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, ngram_n, seed)
-    sigs = sigs.withColumn(
-        "sbucket", F.pmod(F.xxhash64(F.col("id")), F.lit(int(n_buckets)))
-    ).withColumn("gen", F.lit(0))
-    # localCheckpoint: the signature computation (tokenize + gram
-    # explode + md5 + num_perm min-aggregates — the dominant cost of
-    # the whole build) feeds BOTH the sigs write and the band-key
-    # derivation; materializing it once means one signing pass instead
-    # of a sign-then-reread round trip through the sigs/ parquet
-    # (guide §1.2: remove passes first)
-    sigs = sigs.localCheckpoint()
-    keys = _minhash_band_keys(
-        sigs.drop("sbucket", "gen"), num_perm, bands
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("bh"), F.lit(int(n_buckets)))
-    ).withColumn("gen", F.lit(0))
-    # align shuffle partitions to the bucket dirs before partitionBy:
-    # without this every upstream task writes a file into every bucket
-    # (tasks × buckets small files — the write amplification compaction
-    # exists to undo); with it, one file per bucket. The two writes are
-    # independent (different dirs, both fed by the checkpointed sigs) —
-    # overlap them (guide §2.6)
-    from geomesa_hive_spark.pipeline import index_io
-
-    index_io.run_concurrently(
-        lambda: sigs.repartition(int(n_buckets), "sbucket").write.mode(
-            "overwrite"
-        ).partitionBy("sbucket").parquet(os.path.join(path, "sigs")),
-        lambda: keys.repartition(int(n_buckets), "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(os.path.join(path, "bands")),
-    )
-    meta = {
+    m = {
         "num_perm": int(num_perm), "bands": int(bands),
         "ngram_n": int(ngram_n), "seed": int(seed),
-        "n_buckets": int(n_buckets), "gen": 0,
+        "n_buckets": int(n_buckets),
     }
-    with open(os.path.join(path, "_index.json"), "w") as fh:
-        json.dump(meta, fh)
-    return meta
+    sigs = minhash_signatures(df, id_col, text_col, num_perm, ngram_n, seed)
+    return _index(path).build(m, _sides(sigs, m))
 
 
 def minhash_index_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, "_index.json")) as fh:
-        return json.load(fh)
+    return _index(path).meta()
 
 
 def pairs_against_index(
@@ -1439,14 +1422,15 @@ def pairs_against_index(
     import os
 
     spark = new_df.sparkSession
-    m = minhash_index_meta(path)
+    idx = _index(path)
+    m = idx.meta()
     nb = m["n_buckets"]
     if sig_new is None:
         sig_new = minhash_signatures(
             new_df, id_col, text_col, m["num_perm"], m["ngram_n"], m["seed"]
         ).localCheckpoint()
     keys_new = _minhash_band_keys(sig_new, m["num_perm"], m["bands"]).withColumn(
-        "bucket", F.pmod(F.xxhash64("bh"), F.lit(int(nb)))
+        "bucket", index_io.bucket_of("bh", nb)
     )
     # bounded collect: at most n_buckets distinct values (collect_set
     # aggregates partially executor-side into one row — no distinct
@@ -1458,16 +1442,14 @@ def pairs_against_index(
     braw = spark.read.parquet(os.path.join(path, "bands")).filter(
         F.col("bucket").isin(need)            # partition-pruned scan
     )
-    # pending deletes: tombstoned generations never match (physical
-    # removal happens at maintain — see delete_from_minhash_index;
-    # an upsert's re-appended rows are YOUNGER than the tombstone and
-    # stay visible)
-    tomb = _mh_tombstones(spark, path)
-    braw = _mh_apply_tombstones(braw, tomb, "id")
-    idx = braw.select(F.col("id").alias("id_a"), "band", "bh", "bucket")
+    # pending deletes: tombstoned generations never match (an upsert's
+    # re-appended rows are YOUNGER than the tombstone and stay visible)
+    tomb = idx.tombstones(spark)
+    idx_bands = idx.hide(braw, tomb).select(
+        F.col("id").alias("id_a"), "band", "bh", "bucket")
     cand = (
         keys_new.select(F.col("id").alias("id_b"), "band", "bh", "bucket")
-        .join(idx, ["bucket", "band", "bh"])
+        .join(idx_bands, ["bucket", "band", "bh"])
         .select("id_a", "id_b")
         .distinct()
         .localCheckpoint()
@@ -1475,7 +1457,7 @@ def pairs_against_index(
     sneed = sorted(
         int(b)
         for b in cand.agg(
-            F.collect_set(F.pmod(F.xxhash64("id_a"), F.lit(int(nb))))
+            F.collect_set(index_io.bucket_of("id_a", nb))
         ).collect()[0][0]
     )
     sraw = spark.read.parquet(os.path.join(path, "sigs")).filter(
@@ -1483,7 +1465,7 @@ def pairs_against_index(
     )
     # same tombstone cut on the verification side: an upserted id's
     # OLD signature must never score a candidate pair
-    sigs_old = _mh_apply_tombstones(sraw, tomb, "id").select(
+    sigs_old = idx.hide(sraw, tomb).select(
         F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
     )
     if prune_report is not None:
@@ -1506,39 +1488,13 @@ def pairs_against_index(
 
 def delete_from_minhash_index(keys: DataFrame, id_col: str, path: str) -> None:
     """Tombstone documents out of the MinHash index (takedown /
-    opt-out / re-crawled-and-replaced ids) — same Lucene-style
-    semantics as the BM25 index: ids land in an append-only
-    ``tombstones/`` table, queries anti-join them out immediately (a
-    deleted doc can never appear as a match partner), and the next
-    :func:`maintain_minhash_index` drops the signature/band rows
-    physically and clears the log. Each tombstone is stamped with the
-    index's CURRENT generation, so it hides only rows born at or
-    before the delete — a later re-append of the same id (see
-    :func:`upsert_into_minhash_index`) is immediately visible.
+    opt-out / re-crawled-and-replaced ids): a deleted doc can never
+    appear as a match partner, the next :func:`maintain_minhash_index`
+    drops its rows physically, and a later re-append of the same id
+    (:func:`upsert_into_minhash_index`) is visible at once — the
+    generation-versioned tombstones of ``pipeline/index_io.py``.
     Deleting an unknown id is a no-op."""
-    from geomesa_hive_spark.pipeline import index_io
-
-    m = index_io.require_generation_meta(
-        minhash_index_meta(path), "minhash index"
-    )
-    index_io.write_tombstones(keys, id_col, path, int(m["gen"]))
-
-
-def _mh_tombstones(spark, path: str):
-    from geomesa_hive_spark.pipeline import index_io
-
-    return index_io.read_tombstones(spark, path)
-
-
-def _mh_apply_tombstones(rows: DataFrame, tomb, id_col: str) -> DataFrame:
-    from geomesa_hive_spark.pipeline import index_io
-
-    if tomb is None:
-        return rows
-    return index_io.apply_tombstones(
-        index_io.require_generation_column(rows, "minhash index"),
-        tomb, id_col,
-    )
+    _index(path).delete(keys, id_col)
 
 
 def upsert_into_minhash_index(
@@ -1550,12 +1506,11 @@ def upsert_into_minhash_index(
     """Re-index changed documents (the re-crawl case: same ids, new
     content): tombstone the ids at the current generation, then append
     the new content at the NEXT generation — queries immediately see
-    only the new signatures (the tombstone hides generations ≤ its
-    stamp, the re-append is younger), and the next maintain() drops
-    the old rows physically. Cost: O(ids) tombstone write + O(batch)
-    signing — never a bucket rewrite (the Lucene update trade; a
-    targeted rewrite of the id's band buckets would rewrite 1/n_buckets
-    of the index per touched bucket)."""
+    only the new signatures, and the next maintain() drops the old
+    rows physically. Cost: O(ids) tombstone write + O(batch) signing —
+    never a bucket rewrite (the Lucene update trade; a targeted
+    rewrite of the id's band buckets would rewrite 1/n_buckets of the
+    index per touched bucket)."""
     delete_from_minhash_index(new_df.select(id_col), id_col, path)
     return append_to_minhash_index(new_df, id_col, text_col, path)
 
@@ -1571,115 +1526,26 @@ def append_to_minhash_index(
     then append the survivors so tomorrow's crawl dedups against them
     too). Signs ONLY the new batch with the stored parameters and
     appends into the same bucket-partitioned layout — existing index
-    files are never rewritten (parquet append into hash-bucket
-    partitions adds files per partition; re-bucketing is compaction's
-    job, not the writer's). Caller contract: ids must be new — the
-    index stores signatures per id and duplicate ids would double-count
-    candidates (use :func:`upsert_into_minhash_index` for re-crawled
-    ids). Returns the index metadata with the bumped generation."""
-    import json
-    import os
-
-    from geomesa_hive_spark.pipeline import index_io
-
-    m = index_io.require_generation_meta(
-        minhash_index_meta(path), "minhash index"
-    )
-    nb = m["n_buckets"]
-    # bump the append GENERATION: rows carry it, tombstones reference
-    # it, so an UPSERT (delete id, re-append new content) hides only
-    # rows born at or before the delete — no maintain needed between
-    g = int(m["gen"]) + 1
-    sigs = minhash_signatures(
+    files are never rewritten (re-bucketing is compaction's job, not
+    the writer's). Caller contract: ids must be new — the index stores
+    signatures per id and duplicate ids would double-count candidates
+    (use :func:`upsert_into_minhash_index` for re-crawled ids).
+    Returns the index metadata with the bumped generation."""
+    return _index(path).append(lambda m: _sides(minhash_signatures(
         new_df, id_col, text_col, m["num_perm"], m["ngram_n"], m["seed"]
-    ).withColumn("sbucket", F.pmod(F.xxhash64(F.col("id")), F.lit(int(nb))))
-    # localCheckpoint BEFORE the two writes: without it the band-key
-    # write below re-executed the whole signing plan (tokenize + gram
-    # explode + md5 + min-aggs) a second time — the build path never
-    # did (it reread its sigs parquet), but append signed every batch
-    # TWICE (guide §1.2)
-    sigs = sigs.withColumn("gen", F.lit(g)).localCheckpoint()
-    keys = _minhash_band_keys(
-        sigs.drop("sbucket", "gen"), m["num_perm"], m["bands"]
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("bh"), F.lit(int(nb)))
-    ).withColumn("gen", F.lit(g))
-    # independent appends into different dirs, both fed by the
-    # checkpointed sigs — overlap them (guide §2.6)
-    index_io.run_concurrently(
-        lambda: sigs.repartition(int(nb), "sbucket").write.mode("append")
-        .partitionBy("sbucket").parquet(os.path.join(path, "sigs")),
-        lambda: keys.repartition(int(nb), "bucket").write.mode("append")
-        .partitionBy("bucket").parquet(os.path.join(path, "bands")),
-    )
-    m["gen"] = g
-    tmp = os.path.join(path, "_index.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(m, fh)
-    os.replace(tmp, os.path.join(path, "_index.json"))
-    return m
+    ), m))
 
 
 def maintain_minhash_index(spark, path: str) -> dict:
     """Compact the persisted MinHash index back to one file per bucket
-    partition (round 10 — the compaction `append_to_minhash_index`'s
-    docstring promises): every append adds ≥1 parquet file to each
-    touched bucket dir, so after K daily appends a query scans K small
-    files per pruned bucket — cost grows with APPEND COUNT instead of
-    data. maintain() rewrites each side (`bands/`, `sigs/`) through one
-    bucket-aligned shuffle into exactly one file per bucket, content-
-    and parameter-identical (pytest pins pairs_against_index results
-    bit-for-bit across maintain). Swap is rename-based (write to
-    `.compact`, retire the old dir) under the same single-maintainer
-    contract as manifest.vacuum: run with no concurrent query/append in
-    flight. Pending tombstones (see :func:`delete_from_minhash_index`)
-    are applied physically here — band and signature rows of deleted
-    ids dropped during the same rewrite, log cleared after. Returns
-    {side: {files_before, files_after}, "n_tombstones_applied"} where
-    the count is distinct ids whose rows were ACTUALLY removed
-    (unknown-id deletes and already-superseded upsert tombstones do
-    not count — uniform semantics across the three indexes via
-    pipeline/index_io.py)."""
-    import os
-    import shutil
-
-    from geomesa_hive_spark.pipeline import index_io
-
-    m = minhash_index_meta(path)
-    nb = int(m["n_buckets"])
-    report: dict = {}
-    tomb = _mh_tombstones(spark, path)
-    sigs_raw = spark.read.parquet(os.path.join(path, "sigs"))
-    if tomb is not None:
-        # guard BEFORE removed_ids_count: its gen-join on a legacy
-        # gen-less index dies inside Spark with an unresolved-column
-        # AnalysisException instead of the clear rebuild instruction
-        index_io.require_generation_column(sigs_raw, "minhash index")
-    report["n_tombstones_applied"] = index_io.removed_ids_count(
-        sigs_raw, tomb, "id"
-    )
-
-    def _compact(side: str, part: str) -> None:
-        src = os.path.join(path, side)
-        before = index_io.n_part_files(src)
-        tmp = src + ".compact"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        rows = _mh_apply_tombstones(spark.read.parquet(src), tomb, "id")
-        (
-            rows.repartition(nb, part)
-            .write.mode("overwrite").partitionBy(part).parquet(tmp)
-        )
-        index_io.swap_dir(src, tmp)
-        report[side] = {
-            "files_before": before,
-            "files_after": index_io.n_part_files(src),
-        }
-
-    # bands and sigs compact independently (guide §2.6)
-    index_io.run_concurrently(
-        lambda: _compact("bands", "bucket"),
-        lambda: _compact("sigs", "sbucket"),
-    )
-    index_io.clear_tombstones(path)
-    return report
+    partition: every append adds ≥1 parquet file to each touched
+    bucket dir, so after K daily appends a query scans K small files
+    per pruned bucket — cost grows with APPEND COUNT instead of data.
+    maintain() rewrites ``bands/`` and ``sigs/`` content- and
+    parameter-identical (pytest pins pairs_against_index results
+    bit-for-bit across maintain) minus the rows of deleted ids.
+    Returns {side: {files_before, files_after},
+    "n_tombstones_applied"}; the lifecycle, its report and its
+    single-maintainer contract are ``pipeline/index_io.py``'s."""
+    return _index(path).maintain(
+        spark, {"bands": "bucket", "sigs": "sbucket"}, "sigs")

@@ -29,12 +29,13 @@ beyond-reference pipeline battery.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from geomesa_hive_spark.pipeline import index_io
 
 __all__ = [
     "append_to_bm25_index", "bm25_phrase_topk", "bm25_query_index",
@@ -250,6 +251,62 @@ def _query_terms(query: str) -> list[str]:
     return terms
 
 
+def _index(path: str) -> index_io.GenerationalIndex:
+    return index_io.GenerationalIndex(path, "BM25 index",
+                                      meta_file="stats.json")
+
+
+def _doc_stats(docs: DataFrame) -> tuple[int, int]:
+    """Exact (n_docs, total_dl) of (id, dl) rows — two integers, so
+    avgdl is the same double everywhere."""
+    row = docs.agg(F.count("*").alias("n"), F.sum("dl").alias("tot")
+                   ).collect()[0]
+    return int(row["n"]), int(row["tot"] or 0)
+
+
+def _term_df(postings: DataFrame) -> DataFrame:
+    """(term, bucket, df) from (term, id) postings — unique per
+    (term, id), so the row count per term is its document frequency."""
+    return postings.groupBy("term", "bucket").agg(
+        F.count("*").cast("long").alias("df"))
+
+
+def _sides(base: DataFrame, nb: int, positions: bool) -> dict:
+    """The sides of a tokenized batch: ``postings/`` (term, id, dl, tf)
+    and ``terms/`` (term, df) by term bucket, the ``docs/`` (id, dl)
+    side table by id bucket — postings alone can't reconstruct
+    n_docs/total_dl (a zero-token doc has NO postings rows but still
+    counts), so maintain() after deletes recomputes stats from there —
+    and, on a positional index, ``positions/`` (term, id, sorted
+    positions) by term bucket."""
+    postings = (
+        base.select("id", "dl", F.explode("toks").alias("term"))
+        .groupBy("term", "id", "dl")
+        .agg(F.count("*").cast("long").alias("tf"))
+        .withColumn("bucket", index_io.bucket_of("term", nb))
+        .localCheckpoint()
+    )
+    sides = {
+        "postings": (postings, "bucket"),
+        "terms": (_term_df(postings), "bucket"),
+        "docs": (base.select(
+            "id", "dl", index_io.bucket_of("id", nb).alias("dbucket")),
+            "dbucket"),
+    }
+    if positions:
+        # a SEPARATE dataset, so the non-positional postings layout —
+        # and every query that doesn't need positions — is
+        # byte-identical to a positions=False index
+        sides["positions"] = (
+            base.select("id", F.posexplode("toks").alias("pos", "term"))
+            .groupBy("term", "id")
+            .agg(F.sort_array(F.collect_list("pos")).alias("pos"))
+            .withColumn("bucket", index_io.bucket_of("term", nb)),
+            "bucket",
+        )
+    return sides
+
+
 def build_bm25_index(
     docs: DataFrame,
     id_col: str,
@@ -274,7 +331,10 @@ def build_bm25_index(
     - ``terms/`` — (term, df), same bucketing: per-term document
       frequencies precomputed so query-time idf is a |terms|-row read,
       never a postings aggregation;
-    - ``stats.json`` — {n_docs, total_dl, n_buckets}: two exact
+    - ``docs/`` — (id, dl) by id bucket, the stats substrate;
+    - ``positions/`` (``positions=True``) — the positional postings
+      under :func:`bm25_phrase_query_index`;
+    - ``stats.json`` — {n_docs, total_dl, n_buckets, gen}: two exact
       integers, identical avgdl double everywhere.
 
     At 100 TB: the build is one explode + one (term,id) map-side-
@@ -285,94 +345,15 @@ def build_bm25_index(
     if nb < 1:
         raise ValueError("n_buckets must be >= 1")
     # localCheckpoint: the base plan is consumed four times (stats agg,
-    # postings write, terms aggregation, docs side write) and each
-    # independent evaluation would re-run the pandas-UDF tokenization —
-    # a 4x ingest tax (round-10 review finding)
+    # postings, docs and positions writes) and each independent
+    # evaluation would re-run the pandas-UDF tokenization — a 4x
+    # ingest tax
     base = _toked_base(docs, id_col, text_col).localCheckpoint()
-    n_row = base.agg(
-        F.count("*").alias("n"), F.sum("dl").alias("tot")
-    ).collect()[0]
-    stats = {
-        "n_docs": int(n_row["n"]),
-        "total_dl": int(n_row["tot"] or 0),
-        "n_buckets": nb,
-        "gen": 0,
-    }
-    postings = (
-        base.select("id", "dl", F.explode("toks").alias("term"))
-        .groupBy("term", "id", "dl")
-        .agg(F.count("*").cast("long").alias("tf"))
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int"))
-        .withColumn("gen", F.lit(0))
-        .localCheckpoint()
-    )
-    terms = (
-        postings.groupBy("term", "bucket")
-        .agg(F.count("*").cast("long").alias("df"))
-    )
-    # the four dataset writes are independent of each other (different
-    # dirs; postings/terms read the checkpointed postings, docs/
-    # positions read the checkpointed base) — overlap them (guide
-    # §2.6). The per-write repartition on bucket keeps one file set per
-    # partition directory, not one fragment per upstream task.
-    # docs/ is the per-doc (id, dl) side table — the delete/rebuild
-    # substrate: postings alone can't reconstruct n_docs/total_dl (a
-    # zero-token doc has NO postings rows but still counts), so
-    # maintain() after deletes recomputes stats from there, exactly.
-    from geomesa_hive_spark.pipeline import index_io
-
-    writes = [
-        lambda: postings.repartition("bucket").write.mode("overwrite")
-        .partitionBy("bucket").parquet(os.path.join(path, "postings")),
-        lambda: terms.repartition("bucket").write.mode("overwrite")
-        .partitionBy("bucket").parquet(os.path.join(path, "terms")),
-        lambda: _write_docs_side(base, path, nb, mode="overwrite", gen=0),
-    ]
+    n_docs, total_dl = _doc_stats(base)
+    stats = {"n_docs": n_docs, "total_dl": total_dl, "n_buckets": nb}
     if positions:
-        writes.append(
-            lambda: _write_positions(base, path, nb, mode="overwrite",
-                                     gen=0))
         stats["positions"] = True
-    index_io.run_concurrently(*writes)
-    with open(os.path.join(path, "stats.json"), "w") as fh:
-        json.dump(stats, fh)
-    return stats
-
-
-def _write_positions(base: DataFrame, path: str, nb: int, mode: str,
-                     gen: int) -> None:
-    """Positional postings (round 13 — the Lucene-parity layer under
-    phrase queries): one row per (term, id) carrying the SORTED array
-    of token positions, bucket-partitioned exactly like ``postings/``
-    so a phrase query prunes to its terms' buckets. Kept as a SEPARATE
-    dataset so the non-positional postings layout — and every query
-    that doesn't need positions — is byte-identical to a
-    positions=False index."""
-    pos = (
-        base.select("id", F.posexplode("toks").alias("pos", "term"))
-        .groupBy("term", "id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("pos"))
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int"))
-        .withColumn("gen", F.lit(int(gen)))
-    )
-    pos.repartition(nb, "bucket").write.mode(mode).partitionBy(
-        "bucket"
-    ).parquet(os.path.join(path, "positions"))
-
-
-def _write_docs_side(base: DataFrame, path: str, nb: int, mode: str,
-                     gen: int) -> None:
-    (
-        base.select(
-            "id", "dl",
-            F.pmod(F.xxhash64("id"), F.lit(nb)).cast("int").alias("dbucket"),
-            F.lit(int(gen)).alias("gen"),
-        )
-        .repartition(nb, "dbucket")
-        .write.mode(mode).partitionBy("dbucket")
-        .parquet(os.path.join(path, "docs"))
-    )
+    return _index(path).build(stats, _sides(base, nb, positions))
 
 
 def append_to_bm25_index(
@@ -384,87 +365,43 @@ def append_to_bm25_index(
     """Index a new document batch into an existing BM25 index (the
     crawl-ingest loop: retrieve against the index, then append the
     day's documents so tomorrow's queries see them). Tokenizes ONLY
-    the batch with the stored parameters and appends into the same
-    bucket-partitioned layout — existing postings files are never
-    rewritten. The batch's per-term document frequencies land as ONE
-    MORE df row per touched term (append-only; the query side sums df
-    rows per term, and :func:`maintain_bm25_index` folds them back to
-    one), and ``stats.json`` is atomically advanced by the batch's
-    exact integer (n_docs, total_dl). Caller contract: ids must be
+    the batch and appends into the same bucket-partitioned layout —
+    existing postings files are never rewritten. The batch's per-term
+    document frequencies land as ONE MORE df row per touched term
+    (append-only; the query side sums df rows per term, and
+    :func:`maintain_bm25_index` folds them back to one), and
+    ``stats.json`` is atomically advanced by the batch's exact integer
+    (n_docs, total_dl). A positional index stays positional: appended
+    batches carry their positions too. Caller contract: ids must be
     new — postings are per (term, id) and a re-appended id would
     double-count its term frequencies; re-crawled ids go through
-    :func:`upsert_into_bm25_index`, whose generation-versioned
-    tombstones make the replacement safe. Returns the updated stats
-    with the bumped generation."""
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
-    from geomesa_hive_spark.pipeline import index_io
+    :func:`upsert_into_bm25_index`. Returns the updated stats with the
+    bumped generation."""
+    def derive(stats: dict) -> dict:
+        # localCheckpoint: same 4x-tokenization fix as the build path
+        base = _toked_base(new_docs, id_col, text_col).localCheckpoint()
+        n_docs, total_dl = _doc_stats(base)
+        stats["n_docs"] = int(stats["n_docs"]) + n_docs
+        stats["total_dl"] = int(stats["total_dl"]) + total_dl
+        return _sides(base, int(stats["n_buckets"]),
+                      bool(stats.get("positions")))
 
-    index_io.require_generation_meta(stats, "BM25 index")
-    nb = int(stats["n_buckets"])
-    g = int(stats["gen"]) + 1
-    # localCheckpoint: same 4x-tokenization fix as the build path
-    base = _toked_base(new_docs, id_col, text_col).localCheckpoint()
-    n_row = base.agg(
-        F.count("*").alias("n"), F.sum("dl").alias("tot")
-    ).collect()[0]
-    postings = (
-        base.select("id", "dl", F.explode("toks").alias("term"))
-        .groupBy("term", "id", "dl")
-        .agg(F.count("*").cast("long").alias("tf"))
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int"))
-        .withColumn("gen", F.lit(g))
-        .localCheckpoint()
-    )
-    terms = (
-        postings.groupBy("term", "bucket")
-        .agg(F.count("*").cast("long").alias("df"))
-    )
-    # independent appends into different dirs (guide §2.6); a
-    # positional index stays positional: appended batches write their
-    # positions too, or phrase queries would silently miss them
-    writes = [
-        lambda: postings.repartition(nb, "bucket").write.mode("append")
-        .partitionBy("bucket").parquet(os.path.join(path, "postings")),
-        lambda: terms.repartition(nb, "bucket").write.mode("append")
-        .partitionBy("bucket").parquet(os.path.join(path, "terms")),
-        lambda: _write_docs_side(base, path, nb, mode="append", gen=g),
-    ]
-    if stats.get("positions"):
-        writes.append(
-            lambda: _write_positions(base, path, nb, mode="append", gen=g))
-    index_io.run_concurrently(*writes)
-    stats["n_docs"] = int(stats["n_docs"]) + int(n_row["n"])
-    stats["total_dl"] = int(stats["total_dl"]) + int(n_row["tot"] or 0)
-    stats["gen"] = g
-    tmp = os.path.join(path, "stats.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(stats, fh)
-    os.replace(tmp, os.path.join(path, "stats.json"))
-    return stats
+    return _index(path).append(derive)
 
 
 def delete_from_bm25_index(keys: DataFrame, id_col: str, path: str) -> None:
     """Tombstone documents out of the index (opt-out / takedown /
     re-crawl-replaced ids) — Lucene delete semantics, deliberately:
-    the ids land in an append-only ``tombstones/`` table and queries
-    ANTI-JOIN them out immediately (a deleted doc is never returned),
-    but per-term df and the corpus stats stay STALE until the next
-    :func:`maintain_bm25_index` physically drops the rows and rebuilds
-    both exactly — the same trade Lucene makes (deleted docs count in
-    df until segment merge) because computing a deleted doc's term
-    memberships eagerly would need a full postings scan per delete.
-    Tombstones are stamped with the index's CURRENT generation (see
-    pipeline/index_io.py), so a later re-append of the same id — the
-    :func:`upsert_into_bm25_index` path — is immediately visible.
-    Deleting an id not in the index is a no-op."""
-    from geomesa_hive_spark.pipeline import index_io
-
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = index_io.require_generation_meta(
-            json.load(fh), "BM25 index"
-        )
-    index_io.write_tombstones(keys, id_col, path, int(stats["gen"]))
+    queries never return a deleted doc, but per-term df and the
+    corpus stats stay STALE until the next :func:`maintain_bm25_index`
+    physically drops the rows and rebuilds both exactly — the same
+    trade Lucene makes (deleted docs count in df until segment merge)
+    because computing a deleted doc's term memberships eagerly would
+    need a full postings scan per delete. Tombstones are
+    generation-versioned (``pipeline/index_io.py``), so a later
+    re-append of the same id — :func:`upsert_into_bm25_index` — is
+    visible at once. Deleting an id not in the index is a no-op."""
+    _index(path).delete(keys, id_col)
 
 
 def upsert_into_bm25_index(
@@ -475,20 +412,13 @@ def upsert_into_bm25_index(
 ) -> dict:
     """Re-index changed documents (the re-crawl case: same ids, new
     content): tombstone at the current generation, re-append at the
-    next — queries immediately score ONLY the new postings (the
-    tombstone hides generations ≤ its stamp, the re-append is
-    younger); df and corpus stats stay stale until maintain, exactly
-    as for plain deletes (the appended batch's stats are added, the
-    dead generations' are not yet subtracted). Cost: O(ids) tombstone
+    next — queries immediately score ONLY the new postings; df and
+    corpus stats stay stale until maintain, exactly as for plain
+    deletes (the appended batch's stats are added, the dead
+    generations' are not yet subtracted). Cost: O(ids) tombstone
     write + O(batch) tokenize — never a bucket rewrite."""
     delete_from_bm25_index(new_docs.select(id_col), id_col, path)
     return append_to_bm25_index(new_docs, id_col, text_col, path)
-
-
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    from geomesa_hive_spark.pipeline import index_io
-
-    return index_io.read_tombstones(spark, path)
 
 
 def maintain_bm25_index(spark: SparkSession, path: str) -> dict:
@@ -496,125 +426,33 @@ def maintain_bm25_index(spark: SparkSession, path: str) -> dict:
     partition and one df row per term, and APPLY pending tombstones
     physically (the Lucene segment-merge step): every append adds ≥1
     parquet file to each touched bucket dir plus a per-batch df row
-    per term, so after K daily appends a query scans K small files per
-    pruned bucket and merges K df rows — cost grows with APPEND COUNT
-    instead of data; every delete leaves df/stats stale until here.
-    maintain() rewrites ``postings/`` minus tombstoned ids through one
-    bucket-aligned shuffle, REBUILDS ``terms/`` from the surviving
-    postings (count per (term, bucket) — postings are unique per
-    (term, id), so this equals the summed-df path when nothing was
-    deleted; queries before/after a delete-free maintain are
-    bit-identical, pytest-pinned), recomputes exact ``stats.json``
-    from the ``docs/`` side table minus tombstoned generations, and
-    clears the tombstone log. Rename-based swap under the same
-    single-maintainer contract as manifest.vacuum: no concurrent
-    query/append in flight. Returns {side: {files_before,
-    files_after}, "n_tombstones_applied": distinct ids actually
-    removed} — the uniform report semantics of pipeline/index_io.py
-    ("n_tombstoned" is kept as a deprecated alias of the same count)."""
-    import shutil
+    per term, and every delete leaves df/stats stale until here.
+    ``postings/``, ``docs/`` and ``positions/`` compact on the
+    lifecycle core of ``pipeline/index_io.py``; two hooks finish the
+    job in the same chains: ``terms/`` is REBUILT from the compacted
+    postings (never patched — the only delete-correct source of df;
+    equal to the summed-df path when nothing was deleted, so queries
+    before/after a delete-free maintain are bit-identical,
+    pytest-pinned), and ``stats.json``'s n_docs/total_dl are
+    recomputed exactly from the compacted docs side table (it counts
+    zero-token docs, which postings cannot). Returns {side:
+    {files_before, files_after}, "n_tombstones_applied"}."""
+    idx = _index(path)
 
-    from geomesa_hive_spark.pipeline import index_io
+    def terms(stats: dict, report: dict) -> None:
+        post = spark.read.parquet(os.path.join(path, "postings"))
+        report["terms"] = idx.rewrite("terms", _term_df(post), "bucket",
+                                      int(stats["n_buckets"]))
 
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
-    nb = int(stats["n_buckets"])
-    report: dict = {}
-    tomb = _tombstones(spark, path)
-    docs_dir = os.path.join(path, "docs")
-    if tomb is not None and not os.path.isdir(docs_dir):
-        raise ValueError(
-            "cannot apply tombstones: index has no docs/ side table "
-            "(built before round 10) — stats would go permanently "
-            "stale; rebuild the index with the current version"
-        )
+    def doc_stats(stats: dict, report: dict) -> None:
+        stats["n_docs"], stats["total_dl"] = _doc_stats(
+            spark.read.parquet(os.path.join(path, "docs")))
 
-    def _hide(rows):
-        if tomb is None:
-            return rows
-        return index_io.apply_tombstones(
-            index_io.require_generation_column(rows, "BM25 index"),
-            tomb, "id",
-        )
-
-    def _compact(sub: str, part: str) -> None:
-        src = os.path.join(path, sub)
-        before = index_io.n_part_files(src)
-        tmp = src + ".compact"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        (
-            _hide(spark.read.parquet(src))
-            .repartition(nb, part)
-            .write.mode("overwrite").partitionBy(part).parquet(tmp)
-        )
-        index_io.swap_dir(src, tmp)
-        report[sub] = {
-            "files_before": before,
-            "files_after": index_io.n_part_files(src),
-        }
-
-    post_dir = os.path.join(path, "postings")
-
-    def _postings_then_terms() -> None:
-        # terms REBUILT from the compacted postings, never patched —
-        # the only delete-correct source of df; the rebuild must
-        # therefore run AFTER the postings swap (sequential inside
-        # this thunk)
-        _compact("postings", "bucket")
-        term_dir = os.path.join(path, "terms")
-        before = index_io.n_part_files(term_dir)
-        tmp = term_dir + ".compact"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        (
-            spark.read.parquet(post_dir)
-            .groupBy("term", "bucket")
-            .agg(F.count("*").cast("long").alias("df"))
-            .repartition(nb, "bucket")
-            .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        )
-        index_io.swap_dir(term_dir, tmp)
-        report["terms"] = {
-            "files_before": before,
-            "files_after": index_io.n_part_files(term_dir),
-        }
-
-    n_tomb_box = [0]
-
-    def _docs_then_stats() -> None:
-        n_tomb_box[0] = index_io.removed_ids_count(
-            spark.read.parquet(docs_dir), tomb, "id"
-        )
-        _compact("docs", "dbucket")
-        # exact stats from the surviving docs — n_docs counts
-        # zero-token docs too, which postings alone cannot
-        kept = spark.read.parquet(docs_dir)
-        row = kept.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("tot")
-        ).collect()[0]
-        stats["n_docs"] = int(row["n"])
-        stats["total_dl"] = int(row["tot"] or 0)
-        tmpj = os.path.join(path, "stats.json.tmp")
-        with open(tmpj, "w") as fh:
-            json.dump(stats, fh)
-        os.replace(tmpj, os.path.join(path, "stats.json"))
-
-    # three independent chains (guide §2.6): {postings -> terms},
-    # {positions} (round 13 — compacts exactly like postings:
-    # tombstoned generations dropped, one file set per bucket), and
-    # {docs -> stats.json}; each chain touches its own directories
-    chains = [_postings_then_terms]
-    if os.path.isdir(os.path.join(path, "positions")):
-        chains.append(lambda: _compact("positions", "bucket"))
-    if os.path.isdir(docs_dir):
-        chains.append(_docs_then_stats)
-    index_io.run_concurrently(*chains)
-    n_tomb = n_tomb_box[0]
-    index_io.clear_tombstones(path)
-    report["n_tombstones_applied"] = n_tomb
-    report["n_tombstoned"] = n_tomb  # deprecated alias (pre-round-11 key)
-    return report
+    sides = {"postings": "bucket", "docs": "dbucket"}
+    if idx.meta().get("positions"):
+        sides["positions"] = "bucket"
+    return idx.maintain(spark, sides, "docs",
+                        after={"postings": terms, "docs": doc_stats})
 
 
 def bm25_query_index(
@@ -634,23 +472,9 @@ def bm25_query_index(
     the term filter rides the scan. idf folds driver-side from the
     |terms|-row terms read; no corpus-sized work anywhere."""
     terms = _query_terms(query)
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
+    stats = _index(path).meta()
     scored = _score_index_terms(spark, path, terms, stats, k1, b)
     return scored.orderBy(F.col("score_micro").desc(), F.col("id")).limit(int(k))
-
-
-def _term_buckets(spark: SparkSession, terms: list, nb: int) -> list:
-    """term→bucket computed by Spark itself on a literal frame (one
-    tiny local-relation job): Python has no xxhash64 twin, and
-    reimplementing it driver-side would be a silent-drift hazard."""
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
-    return sorted({
-        r.b
-        for r in tdf.select(
-            F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int").alias("b")
-        ).collect()
-    })
 
 
 def _score_index_terms(spark: SparkSession, path: str, terms: list,
@@ -667,7 +491,7 @@ def _score_index_terms(spark: SparkSession, path: str, terms: list,
     if n_docs == 0:
         raise ValueError("index is empty")
     avgdl = stats["total_dl"] / n_docs
-    buckets = _term_buckets(spark, terms, nb)
+    buckets = index_io.buckets_of(spark, terms, nb)
     term_tbl = (
         spark.read.parquet(os.path.join(path, "terms"))
         .filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
@@ -703,14 +527,8 @@ def _score_index_terms(spark: SparkSession, path: str, terms: list,
     # re-appended (upserted) rows are younger and stay visible;
     # df/stats stay stale until maintain() (Lucene delete semantics —
     # see delete_from_bm25_index)
-    tomb = _tombstones(spark, path)
-    if tomb is not None:
-        from geomesa_hive_spark.pipeline import index_io
-
-        post = index_io.apply_tombstones(
-            index_io.require_generation_column(post, "BM25 index"),
-            tomb, "id",
-        )
+    idx = _index(path)
+    post = idx.hide(post, idx.tombstones(spark))
     if cand is not None:
         post = post.join(F.broadcast(cand), "id", "left_semi")
     return (
@@ -760,8 +578,8 @@ def bm25_phrase_query_index(
     if len(ptoks) < 2:
         raise ValueError(
             "phrase needs at least 2 tokens — use bm25_query_index")
-    with open(os.path.join(path, "stats.json")) as fh:
-        stats = json.load(fh)
+    idx = _index(path)
+    stats = idx.meta()
     if not stats.get("positions"):
         raise ValueError(
             "index has no positional postings — rebuild with "
@@ -769,19 +587,12 @@ def bm25_phrase_query_index(
         )
     terms = sorted(set(ptoks))
     nb = int(stats["n_buckets"])
-    buckets = _term_buckets(spark, terms, nb)
+    buckets = index_io.buckets_of(spark, terms, nb)
     pos = (
         spark.read.parquet(os.path.join(path, "positions"))
         .filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
     )
-    tomb = _tombstones(spark, path)
-    if tomb is not None:
-        from geomesa_hive_spark.pipeline import index_io
-
-        pos = index_io.apply_tombstones(
-            index_io.require_generation_column(pos, "BM25 index"),
-            tomb, "id",
-        )
+    pos = idx.hide(pos, idx.tombstones(spark))
     byid = pos.groupBy("id").agg(
         F.map_from_entries(
             F.collect_list(F.struct("term", "pos"))).alias("m")

@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geomesa_hive_spark.pipeline import index_io
 from geomesa_hive_spark.pipeline.dedup import cosine_sim
 
 
@@ -552,38 +553,44 @@ def build_ivf_index(
     EXACTLY on the float column. Quantization params (mins, scales)
     live in ``_index.json`` like the centroids — appends quantize with
     the stored grid, so appended codes ≡ rebuild codes."""
-    import json
-    import os
-
     centroids = _pivot_centroids(df, id_col, vec_col, n_lists)
-    assigned = assign_list_ids(
-        df.select(id_col, vec_col), vec_col, centroids
-    ).withColumn("gen", F.lit(0))
     meta = {
         "n_lists": int(n_lists), "id_col": id_col, "vec_col": vec_col,
-        "dim": int(centroids.shape[1]), "gen": 0,
+        "dim": int(centroids.shape[1]),
         "centroids": [[float(x) for x in c] for c in centroids],
     }
     if sq8:
         mins, scales = _sq8_params(df, vec_col, centroids.shape[1])
-        assigned = assigned.withColumn(
-            "vec_q", _sq8_quantize(vec_col, mins, scales)
-        )
         meta["sq8"] = {"mins": mins, "scales": scales}
-    assigned.repartition(int(n_lists), "list_id").write.mode(
-        "overwrite"
-    ).partitionBy("list_id").parquet(os.path.join(path, "lists"))
-    with open(os.path.join(path, "_index.json"), "w") as fh:
-        json.dump(meta, fh)
-    return meta
+    return _index(path, meta).build(meta, _sides(df, meta))
+
+
+def _index(path: str, m: dict | None = None) -> index_io.GenerationalIndex:
+    """The IVF index at ``path``; its rows' id column is the meta's
+    ``id_col`` (``m``, read from ``path`` when not given)."""
+    return index_io.GenerationalIndex(
+        path, "IVF index", id_col=(m or ivf_index_meta(path))["id_col"],
+        nb_key="n_lists")
+
+
+def _sides(df: DataFrame, m: dict) -> dict:
+    """``lists/``: the batch's vectors under their nearest STORED
+    centroid, partitioned by ``list_id`` (plus, on an SQ8 index, the
+    codes on the stored grid — appended codes ≡ rebuild codes)."""
+    assigned = assign_list_ids(
+        df.select(m["id_col"], m["vec_col"]), m["vec_col"],
+        np.asarray(m["centroids"], dtype=np.float64),
+    )
+    if "sq8" in m:
+        assigned = assigned.withColumn(
+            "vec_q",
+            _sq8_quantize(m["vec_col"], m["sq8"]["mins"], m["sq8"]["scales"]),
+        )
+    return {"lists": (assigned, "list_id")}
 
 
 def ivf_index_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, "_index.json")) as fh:
-        return json.load(fh)
+    return index_io.read_meta(path)
 
 
 def append_to_ivf_index(new_df: DataFrame, path: str) -> dict:
@@ -592,38 +599,10 @@ def append_to_ivf_index(new_df: DataFrame, path: str) -> dict:
     full rebuild over build-corpus pivots would give them) and append
     into the same list partitions; existing files are never rewritten.
     Caller contract: ids must be new — replaced vectors go through
-    :func:`upsert_into_ivf_index`, whose generation-versioned
-    tombstones make the swap safe. Re-bucketing is
+    :func:`upsert_into_ivf_index`. Re-bucketing is
     :func:`maintain_ivf_index`'s job. Returns the metadata with the
     bumped generation."""
-    import json
-    import os
-
-    from geomesa_hive_spark.pipeline import index_io
-
-    m = index_io.require_generation_meta(ivf_index_meta(path), "IVF index")
-    g = int(m["gen"]) + 1
-    centroids = np.asarray(m["centroids"], dtype=np.float64)
-    assigned = assign_list_ids(
-        new_df.select(m["id_col"], m["vec_col"]), m["vec_col"], centroids
-    ).withColumn("gen", F.lit(g))
-    if "sq8" in m:
-        # the stored grid is the commitment: appended codes ≡ the codes
-        # a full rebuild over the build corpus's params would give
-        assigned = assigned.withColumn(
-            "vec_q",
-            _sq8_quantize(m["vec_col"], m["sq8"]["mins"],
-                          m["sq8"]["scales"]),
-        )
-    assigned.repartition(int(m["n_lists"]), "list_id").write.mode(
-        "append"
-    ).partitionBy("list_id").parquet(os.path.join(path, "lists"))
-    m["gen"] = g
-    tmp = os.path.join(path, "_index.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(m, fh)
-    os.replace(tmp, os.path.join(path, "_index.json"))
-    return m
+    return _index(path).append(lambda m: _sides(new_df, m))
 
 
 def upsert_into_ivf_index(new_df: DataFrame, path: str) -> dict:
@@ -640,68 +619,26 @@ def upsert_into_ivf_index(new_df: DataFrame, path: str) -> dict:
 
 
 def delete_from_ivf_index(keys: DataFrame, path: str) -> None:
-    """Tombstone vectors out of the IVF index — Lucene-style delete
-    semantics shared with the minhash/BM25 indexes (generation-
-    versioned via pipeline/index_io.py, so an upsert's re-appended
-    vectors stay visible): ids land in an append-only ``tombstones/``
-    table, :func:`knn_query_index` anti-joins them out immediately (a
-    deleted vector can never be a neighbor), and the next
-    :func:`maintain_ivf_index` drops the rows physically during its
-    rewrite and clears the log. The stored centroids are NOT
-    re-derived on delete — the index is the parameter commitment, and
-    probes stay valid for any corpus subset (deleting vectors can only
-    shrink lists, never move one). Deleting an unknown id is a
-    no-op."""
-    from geomesa_hive_spark.pipeline import index_io
-
-    m = index_io.require_generation_meta(ivf_index_meta(path), "IVF index")
-    index_io.write_tombstones(keys, m["id_col"], path, int(m["gen"]))
-
-
-def _ivf_tombstones(spark, path: str):
-    from geomesa_hive_spark.pipeline import index_io
-
-    return index_io.read_tombstones(spark, path)
+    """Tombstone vectors out of the IVF index (generation-versioned —
+    ``pipeline/index_io.py``): a deleted vector can never be a
+    neighbor, and the next :func:`maintain_ivf_index` drops its rows.
+    The stored centroids are NOT re-derived on delete — the index is
+    the parameter commitment, and probes stay valid for any corpus
+    subset (deleting vectors can only shrink lists, never move one).
+    Deleting an unknown id is a no-op."""
+    idx = _index(path)
+    idx.delete(keys, idx.id_col)
 
 
 def maintain_ivf_index(spark, path: str) -> dict:
     """Compact the list partitions back to one file per list (each
     append adds ≥1 file per touched list — after K appends a probe
     reads K small files per list) and apply pending tombstones
-    physically (see :func:`delete_from_ivf_index`). Content- and
-    centroid-identical when nothing was deleted; same
-    single-maintainer contract as the minhash/manifest maintenance
-    ops. Returns {files_before, files_after, n_tombstones_applied}
-    with the count = distinct ids whose rows were ACTUALLY removed
-    (pipeline/index_io.py's uniform semantics)."""
-    import os
-    import shutil
-
-    from geomesa_hive_spark.pipeline import index_io
-
-    m = ivf_index_meta(path)
-    src = os.path.join(path, "lists")
-    tomb = _ivf_tombstones(spark, path)
-    before = index_io.n_part_files(src)
-    tmp = src + ".compact"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    rows = spark.read.parquet(src)
-    n_removed = 0
-    if tomb is not None:
-        rows = index_io.require_generation_column(rows, "IVF index")
-        n_removed = index_io.removed_ids_count(rows, tomb, m["id_col"])
-        rows = index_io.apply_tombstones(rows, tomb, m["id_col"])
-    (
-        rows.repartition(int(m["n_lists"]), "list_id")
-        .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-    )
-    index_io.swap_dir(src, tmp)
-    rep = {"files_before": before,
-           "files_after": index_io.n_part_files(src),
-           "n_tombstones_applied": n_removed}
-    index_io.clear_tombstones(path)
-    return rep
+    physically, on the lifecycle core of ``pipeline/index_io.py``.
+    Content- and centroid-identical when nothing was deleted. Returns
+    {files_before, files_after, n_tombstones_applied}."""
+    rep = _index(path).maintain(spark, {"lists": "list_id"}, "lists")
+    return {**rep.pop("lists"), **rep}
 
 
 def knn_query_index(
@@ -738,6 +675,7 @@ def knn_query_index(
     import os
 
     m = ivf_index_meta(path)
+    idx = _index(path, m)
     centroids = np.asarray(m["centroids"], dtype=np.float64)
     order = _probe_lists(centroids, query_vec, n_probe)
     if prune_report is not None:
@@ -749,14 +687,7 @@ def knn_query_index(
     # pending deletes: tombstoned generations are never neighbors —
     # upserted (re-appended) vectors are younger and stay visible
     # (physical removal happens at maintain)
-    tomb = _ivf_tombstones(spark, path)
-    if tomb is not None:
-        from geomesa_hive_spark.pipeline import index_io
-
-        cand = index_io.apply_tombstones(
-            index_io.require_generation_column(cand, "IVF index"),
-            tomb, m["id_col"],
-        )
+    cand = idx.hide(cand, idx.tombstones(spark))
     if pre_filter is not None:
         cand = cand.filter(
             F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter
@@ -824,6 +755,7 @@ def knn_join_index(
 
     spark = queries.sparkSession
     m = ivf_index_meta(path)
+    idx = _index(path, m)
     centroids = np.asarray(m["centroids"], dtype=np.float64)
     d2s = _d2_all(centroids, q_vec)
     pairs = F.transform(
@@ -848,14 +780,7 @@ def knn_join_index(
         spark.read.parquet(os.path.join(path, "lists"))
         .filter(F.col("list_id").isin(need))
     )
-    tomb = _ivf_tombstones(spark, path)
-    if tomb is not None:
-        from geomesa_hive_spark.pipeline import index_io
-
-        cand = index_io.apply_tombstones(
-            index_io.require_generation_column(cand, "IVF index"),
-            tomb, m["id_col"],
-        )
+    cand = idx.hide(cand, idx.tombstones(spark))
     sim = cosine_sim(F.col("qv"), F.col(m["vec_col"]))
     # no pair dedup needed: every vector lives in exactly ONE list
     # partition, so (qid, id) appears at most once in the join

@@ -4,8 +4,7 @@ Accelerated ``WHERE text LIKE '%pattern%'``: the full-scan form is a
 per-row ``contains()`` over 100 TB of text; PostgreSQL's answer is the
 pg_trgm GIN index, and this module is its lakehouse twin in the repo's
 persisted-index family (BM25 / MinHash / IVF — same bucket-partitioned
-layout, same ``pipeline/index_io.py`` generation-versioned tombstone
-lifecycle):
+layout, same lifecycle core):
 
 - ``build_trgm_index`` extracts each document's DISTINCT character
   trigrams with NATIVE exprs (lower → transform/substring →
@@ -19,11 +18,11 @@ lifecycle):
   sufficient: trigrams can be scattered), then rechecks survivors
   with an exact ``contains`` against the pruned docs slice — so the
   result is EXACTLY the full-scan answer at index-read cost.
-- append / delete / maintain follow the shared discipline: appends
-  land gen-stamped rows in the same buckets, deletes are tombstones
-  applied at query time (anti-join — a deleted doc is never
-  returned), maintain physically drops covered rows and compacts to
-  one file per bucket.
+- append / delete / maintain run on the shared lifecycle core of
+  ``pipeline/index_io.py`` (generation-versioned tombstones applied at
+  query time, physically dropped at maintain, one file per bucket
+  after it); the meta ``_index.json`` carries ``n_docs``, the count of
+  documents the index holds physically.
 
 Patterns shorter than 3 characters cannot name a trigram and are
 REFUSED (the index cannot prune for them — run the scan instead);
@@ -35,11 +34,12 @@ containment, not pg_trgm's similarity operator).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from geomesa_hive_spark.pipeline import index_io
 
 __all__ = [
     "build_trgm_index",
@@ -59,9 +59,12 @@ _TRIS = (
 )
 
 
+def _index(path: str) -> index_io.GenerationalIndex:
+    return index_io.GenerationalIndex(path, "trigram index")
+
+
 def trgm_index_meta(path: str) -> dict:
-    with open(os.path.join(path, "_index.json")) as fh:
-        return json.load(fh)
+    return _index(path).meta()
 
 
 def _base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -82,29 +85,13 @@ def _base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _write_batch(base: DataFrame, path: str, nb: int, gen: int,
-                 mode: str) -> None:
-    from geomesa_hive_spark.pipeline import index_io
-
-    posts = (
-        base.select("id", F.explode(F.expr(_TRIS)).alias("tri"))
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64("tri"), F.lit(nb)).cast("int"))
-        .withColumn("gen", F.lit(int(gen)))
-    )
-    docs = (
-        base.withColumn(
-            "dbucket", F.pmod(F.xxhash64("id"), F.lit(nb)).cast("int"))
-        .withColumn("gen", F.lit(int(gen)))
-    )
-    # the two writes are independent (different dirs, both fed by the
-    # materialized base) — overlap them (guide §2.6)
-    index_io.run_concurrently(
-        lambda: posts.repartition(nb, "bucket").write.mode(mode)
-        .partitionBy("bucket").parquet(os.path.join(path, "postings")),
-        lambda: docs.repartition(nb, "dbucket").write.mode(mode)
-        .partitionBy("dbucket").parquet(os.path.join(path, "docs")),
-    )
+def _sides(base: DataFrame, nb: int) -> dict:
+    posts = base.select("id", F.explode(F.expr(_TRIS)).alias("tri"))
+    bucket = index_io.bucket_of
+    return {
+        "postings": (posts.withColumn("bucket", bucket("tri", nb)), "bucket"),
+        "docs": (base.withColumn("dbucket", bucket("id", nb)), "dbucket"),
+    }
 
 
 def build_trgm_index(
@@ -118,11 +105,8 @@ def build_trgm_index(
     the metadata dict (pinned in ``_index.json``)."""
     nb = int(n_buckets)
     base = _base(df, id_col, text_col).localCheckpoint()
-    _write_batch(base, path, nb, gen=0, mode="overwrite")
-    meta = {"n_buckets": nb, "gen": 0, "n_docs": base.count()}
-    with open(os.path.join(path, "_index.json"), "w") as fh:
-        json.dump(meta, fh)
-    return meta
+    return _index(path).build({"n_buckets": nb, "n_docs": base.count()},
+                              _sides(base, nb))
 
 
 def append_to_trgm_index(
@@ -132,78 +116,31 @@ def append_to_trgm_index(
     append-only — existing files never rewritten). Caller contract:
     ids must be new; a re-crawled id is tombstoned first (delete +
     append = upsert, the shared index discipline)."""
-    from geomesa_hive_spark.pipeline import index_io
+    def derive(meta: dict) -> dict:
+        base = _base(new_docs, id_col, text_col).localCheckpoint()
+        meta["n_docs"] = int(meta["n_docs"]) + base.count()
+        return _sides(base, int(meta["n_buckets"]))
 
-    meta = index_io.require_generation_meta(
-        trgm_index_meta(path), "trigram index")
-    nb = int(meta["n_buckets"])
-    g = int(meta["gen"]) + 1
-    base = _base(new_docs, id_col, text_col).localCheckpoint()
-    _write_batch(base, path, nb, gen=g, mode="append")
-    meta["gen"] = g
-    meta["n_docs"] = int(meta["n_docs"]) + base.count()
-    tmp = os.path.join(path, "_index.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "_index.json"))
-    return meta
+    return _index(path).append(derive)
 
 
 def delete_from_trgm_index(keys: DataFrame, id_col: str,
                            path: str) -> None:
     """Tombstone documents out (applied at query time immediately;
     physically dropped at the next maintain). Unknown ids no-op."""
-    from geomesa_hive_spark.pipeline import index_io
-
-    meta = index_io.require_generation_meta(
-        trgm_index_meta(path), "trigram index")
-    index_io.write_tombstones(keys, id_col, path, int(meta["gen"]))
+    _index(path).delete(keys, id_col)
 
 
 def maintain_trgm_index(spark: SparkSession, path: str) -> dict:
-    """Apply tombstones physically and compact to one file per bucket
-    (the uniform maintain contract; ``n_tombstones_applied`` reports
-    distinct ids actually removed)."""
-    from geomesa_hive_spark.pipeline import index_io
+    """Apply tombstones physically and compact to one file per bucket.
+    Returns the core's report plus ``n_docs`` after the removal."""
+    def n_docs(meta: dict, report: dict) -> None:
+        meta["n_docs"] = report["n_docs"] = (
+            int(meta["n_docs"]) - report["n_tombstones_applied"])
 
-    meta = index_io.require_generation_meta(
-        trgm_index_meta(path), "trigram index")
-    nb = int(meta["n_buckets"])
-    tomb = index_io.read_tombstones(spark, path)
-    docs = index_io.require_generation_column(
-        spark.read.parquet(os.path.join(path, "docs")),
-        "trigram index docs")
-    n_removed = index_io.removed_ids_count(docs, tomb, "id")
-
-    def _compact(sub: str, part: str) -> None:
-        rows = index_io.require_generation_column(
-            spark.read.parquet(os.path.join(path, sub)),
-            f"trigram index {sub}")
-        kept = index_io.apply_tombstones(rows, tomb, "id")
-        tmp = os.path.join(path, f"_{sub}_tmp")
-        kept.repartition(nb, part).write.mode("overwrite").partitionBy(
-            part
-        ).parquet(tmp)
-        index_io.swap_dir(os.path.join(path, sub), tmp)
-
-    # postings and docs compact independently (guide §2.6)
-    index_io.run_concurrently(
-        lambda: _compact("postings", "bucket"),
-        lambda: _compact("docs", "dbucket"),
-    )
-    index_io.clear_tombstones(path)
-    meta["n_docs"] = int(meta["n_docs"]) - n_removed
-    tmp = os.path.join(path, "_index.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "_index.json"))
-    return {
-        "n_tombstones_applied": int(n_removed),
-        "postings_files": index_io.n_part_files(
-            os.path.join(path, "postings")),
-        "docs_files": index_io.n_part_files(os.path.join(path, "docs")),
-        "n_docs": int(meta["n_docs"]),
-    }
+    return _index(path).maintain(
+        spark, {"postings": "bucket", "docs": "dbucket"}, "docs",
+        after={"docs": n_docs})
 
 
 def substring_query_index(
@@ -224,10 +161,8 @@ def substring_query_index(
     survivors of the all-trigrams intersection; a pattern common enough
     to name millions of candidates defeats a trigram index everywhere
     (pg_trgm included) and should run as the plain contains() scan."""
-    from geomesa_hive_spark.pipeline import index_io
-
-    meta = trgm_index_meta(path)
-    nb = int(meta["n_buckets"])
+    idx = _index(path)
+    nb = int(idx.meta()["n_buckets"])
     pat = pattern.lower()
     if len(pat) < 3:
         raise ValueError(
@@ -236,18 +171,12 @@ def substring_query_index(
             "instead"
         )
     tris = sorted({pat[i:i + 3] for i in range(len(pat) - 2)})
-    # trigram→bucket via the shared literal-frame helper (one tiny
-    # local-relation job, python-side dedup — no distinct shuffle;
-    # same rationale as retrieval._term_buckets: Python has no
-    # xxhash64 twin, reimplementing it would be a drift hazard)
-    from geomesa_hive_spark.pipeline.retrieval import _term_buckets
-
-    need = _term_buckets(spark, tris, nb)
-    tomb = index_io.read_tombstones(spark, path)
-    posts = spark.read.parquet(os.path.join(path, "postings")).filter(
-        F.col("bucket").isin(need) & F.col("tri").isin(tris)
-    )
-    posts = index_io.apply_tombstones(posts, tomb, "id")
+    need = index_io.buckets_of(spark, tris, nb)
+    tomb = idx.tombstones(spark)
+    posts = idx.hide(
+        spark.read.parquet(os.path.join(path, "postings")).filter(
+            F.col("bucket").isin(need) & F.col("tri").isin(tris)),
+        tomb)
     # candidates carry their doc bucket (the same pmod(xxhash64(id))
     # the writer used); the docs side is then pruned by DYNAMIC
     # partition pruning off the broadcast join on (id, dbucket) —
@@ -260,8 +189,7 @@ def substring_query_index(
         .agg(F.countDistinct("tri").alias("nt"))
         .filter(F.col("nt") == len(tris))
         .select("id")
-        .withColumn("dbucket",
-                    F.pmod(F.xxhash64("id"), F.lit(nb)).cast("int"))
+        .withColumn("dbucket", index_io.bucket_of("id", nb))
     )
     if prune_report is not None:
         prune_report.update({
@@ -270,8 +198,7 @@ def substring_query_index(
             "n_buckets": nb,
             "n_trigrams": len(tris),
         })
-    docs = spark.read.parquet(os.path.join(path, "docs"))
-    docs = index_io.apply_tombstones(docs, tomb, "id")
+    docs = idx.hide(spark.read.parquet(os.path.join(path, "docs")), tomb)
     return (
         docs.join(F.broadcast(cands), ["id", "dbucket"])
         .filter(F.col("t").contains(pat))

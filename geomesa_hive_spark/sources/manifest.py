@@ -50,7 +50,6 @@ __all__ = [
 
 _MANIFEST = "_manifest.json"
 _MANIFEST_DIR = "_manifest"   # parquet-backed sharded manifest (at-scale tier)
-_DELTA_LOG = "_deltas.json"   # legacy single-file log (read-compat only)
 _COMMIT_DIR = "_commits"      # one JSON per commit, name = zero-padded seq
 _CKPT_DIR = "_checkpoints"    # materialized snapshots: <seq>/ data + <seq>.json
 
@@ -1299,15 +1298,11 @@ def compact(
 
 
 def _delta_log(path: str) -> list[dict]:
-    """All committed deltas in seq order: the legacy single-file log
-    (if present) plus one JSON per commit under ``_commits/``. A commit
-    file is the atomic commit point — it appears fully-written or not
-    at all (hard-linked into place, never written in place)."""
+    """All committed deltas in seq order: one JSON per commit under
+    ``_commits/``. A commit file is the atomic commit point — it
+    appears fully-written or not at all (hard-linked into place, never
+    written in place)."""
     entries: list[dict] = []
-    p = os.path.join(path, _DELTA_LOG)
-    if os.path.exists(p):
-        with open(p) as fh:
-            entries.extend(json.load(fh))
     cdir = os.path.join(path, _COMMIT_DIR)
     if os.path.isdir(cdir):
         for name in os.listdir(cdir):
@@ -1470,9 +1465,10 @@ def write_delta(
     JSON commit log: upserted rows (``df``) and key-only tombstones
     (``delete_keys``, a one-column frame of ``key_col`` values) land
     in a NEW file set ``_delta_<seq>/`` without touching base files;
-    ``_deltas.json`` records commit order. Within one commit a delete
-    beats an upsert of the same key (delete-after-write, matching
-    Delta's MERGE semantics); across commits the later commit wins.
+    one ``_commits/<seq>.json`` file per commit records commit order.
+    Within one commit a delete beats an upsert of the same key
+    (delete-after-write, matching Delta's MERGE semantics); across
+    commits the later commit wins.
 
     Why this matters at 100 TB: rewriting a base file to change one
     row is an O(file) write amplification — a day of point updates
@@ -2553,18 +2549,6 @@ def vacuum(
     for n in at_risk:
         delete_tag(path, n)
 
-    # legacy single-file log: rewrite with the surviving suffix
-    legacy = os.path.join(path, _DELTA_LOG)
-    if os.path.exists(legacy):
-        with open(legacy) as fh:
-            entries = json.load(fh)
-        keep = [e for e in entries if e["seq"] > cutoff]
-        for e in entries:
-            if e["seq"] <= cutoff:
-                removed_commits += 1
-                removed_files += _rm_tree(e["path"])
-        with open(legacy, "w") as fh:
-            json.dump(keep, fh)
     cdir = os.path.join(path, _COMMIT_DIR)
     if os.path.isdir(cdir):
         for name in sorted(os.listdir(cdir)):

@@ -2382,9 +2382,11 @@ def test_index_mutations_refuse_legacy_layout(spark, tmp_path):
     validates generation versioning BEFORE writing anything. A legacy
     (gen-less) layout is refused with the uniform rebuild message, and
     — the mutate-before-validate trap — NO tombstones/ dir is left
-    behind by a refused delete/upsert; maintain on a legacy index with
-    a (manually planted) pending tombstone log raises the same clear
-    ValueError instead of an unresolved-'gen' AnalysisException."""
+    behind by a refused delete/upsert. maintain refuses a gen-less
+    meta too, in all four families, even with no tombstones pending;
+    maintain on a legacy index with a (manually planted) pending
+    tombstone log raises the same clear ValueError instead of an
+    unresolved-'gen' AnalysisException."""
     import json
     import os
 
@@ -2398,7 +2400,12 @@ def test_index_mutations_refuse_legacy_layout(spark, tmp_path):
         upsert_into_minhash_index,
     )
     from geomesa_hive_spark.pipeline.retrieval import (
-        build_bm25_index, delete_from_bm25_index, upsert_into_bm25_index,
+        build_bm25_index, delete_from_bm25_index, maintain_bm25_index,
+        upsert_into_bm25_index,
+    )
+    from geomesa_hive_spark.pipeline.trgm import (
+        append_to_trgm_index, build_trgm_index, delete_from_trgm_index,
+        maintain_trgm_index,
     )
 
     docs = spark.createDataFrame(
@@ -2454,6 +2461,26 @@ def test_index_mutations_refuse_legacy_layout(spark, tmp_path):
             op()
     assert not os.path.isdir(os.path.join(iv, "tombstones"))
 
+    # --- trigram -------------------------------------------------
+    tg = str(tmp_path / "trgm_legacy")
+    build_trgm_index(docs, "id", "text", tg, n_buckets=2)
+    _strip_gen(os.path.join(tg, "_index.json"))
+    for op in (
+        lambda: append_to_trgm_index(docs, "id", "text", tg),
+        lambda: delete_from_trgm_index(keys, "id", tg),
+    ):
+        with pytest.raises(ValueError, match="predates generation"):
+            op()
+    assert not os.path.isdir(os.path.join(tg, "tombstones"))
+
+    # --- maintain on a gen-stripped meta, no tombstones pending --
+    for path, maintain in (
+        (mh, maintain_minhash_index), (bm, maintain_bm25_index),
+        (iv, similarity.maintain_ivf_index), (tg, maintain_trgm_index),
+    ):
+        with pytest.raises(ValueError, match="predates generation"):
+            maintain(spark, path)
+
     # --- maintain on a legacy index with planted tombstones ------
     # (pre-guard APIs could have left this state behind): must give
     # the rebuild ValueError, not an unresolved-'gen' AnalysisException
@@ -2464,6 +2491,46 @@ def test_index_mutations_refuse_legacy_layout(spark, tmp_path):
     index_io.write_tombstones(keys, "id", mh, 0)
     with pytest.raises(ValueError, match="predates generation"):
         maintain_minhash_index(spark, mh)
+
+
+def test_trgm_maintain_retry_after_failed_clear(spark, tmp_path,
+                                                monkeypatch):
+    """maintain commits the meta BEFORE it clears the tombstone log: a
+    failure in between leaves a log whose rows are already gone, so the
+    re-run removes 0 ids and ``n_docs`` still equals the live count."""
+    import pytest
+
+    from geomesa_hive_spark.pipeline import index_io
+    from geomesa_hive_spark.pipeline.trgm import (
+        build_trgm_index, delete_from_trgm_index, maintain_trgm_index,
+        substring_query_index, trgm_index_meta,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"document number {i}") for i in range(6)], "id long, t string")
+    p = str(tmp_path / "trgm")
+    build_trgm_index(docs, "id", "t", p, n_buckets=4)
+    delete_from_trgm_index(
+        spark.createDataFrame([(1,), (4,)], "id long"), "id", p)
+
+    clear = index_io.clear_tombstones
+    calls = []
+
+    def clear_fails_once(path):
+        calls.append(path)
+        if len(calls) == 1:
+            raise OSError("injected failure while clearing tombstones")
+        clear(path)
+
+    monkeypatch.setattr(index_io, "clear_tombstones", clear_fails_once)
+    with pytest.raises(OSError, match="injected"):
+        maintain_trgm_index(spark, p)
+    rep = maintain_trgm_index(spark, p)
+    assert rep["n_tombstones_applied"] == 0
+    assert rep["n_docs"] == trgm_index_meta(p)["n_docs"] == 4
+    got = {r.id for r in substring_query_index(spark, p, "document")
+           .collect()}
+    assert got == {0, 2, 3, 5}
 
 
 def test_check_constraints_all_kinds(spark):
